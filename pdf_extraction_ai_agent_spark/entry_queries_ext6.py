@@ -377,7 +377,7 @@ EXT6_QUERIES["q44_layout_tables"] = q44_layout_tables
 # pseudo-PDF docs whose table text is deliberately NOT x-aligned (per-row
 # jitter), so q44's alignment criterion cannot find the grid — but the
 # drawn h/v ruling segments define it exactly
-# (texttables.detect_lattice_tables over pdf_runs + pdf_rulings).
+# (texttables.lattice_cells_from_docs).
 # ---------------------------------------------------------------------------
 
 # fixed grid geometry: 5 h-rules (4 row bands), 4 v-rules (3 col bands)
@@ -434,8 +434,8 @@ def q45_lattice_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     # beyond the doc groupBy). The round-start plan re-ran the doc-build +
     # posexplode + regexes FIVE times (10 source scans) and cascaded 4
     # sort-merge joins + 2 windows — see plans/r08/q45_* before/after;
-    # parse parity with pdf_runs/pdf_rulings is pinned by
-    # tests/test_lattice_kernel_equivalence.py.
+    # parity with this query's oracle SQL over hand-built documents is
+    # pinned by tests/test_lattice_kernel_equivalence.py.
     return lattice_cells_from_docs(doc)
 
 

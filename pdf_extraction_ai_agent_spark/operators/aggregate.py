@@ -1,7 +1,8 @@
-"""A1-A4 — the summary/query layer over parsed claim records.
+"""A3/A5/A6/A9 — the summary/query layer over parsed claim records.
+(A1/A2 and A4 are inline in q06/q08.)
 
-Reference: streamlit_e2e_app.py:410-470 (compute_lob_summary),
-:1003-1014 (rollup + avg), :1058/:1082-1089 (top-N, frequency).
+Reference: streamlit_e2e_app.py:1058 (top-N), compare_models.py:46-66
+(accuracy).
 
 All are built-in hash aggregates: Spark performs partial (map-side) then
 final aggregation — no custom UDAFs needed, and top-N compiles to
@@ -17,31 +18,6 @@ from pyspark.sql import functions as F
 from ..functions.money import money_coerce_col
 
 
-def lob_summary(df: DataFrame, lob_col: str = "lob", paid_col: str = "amount",
-                alae_col: str | None = None, claim_col: str = "claim_number") -> DataFrame:
-    """A1/A2 — per-LOB rows, paid/ALAE totals, claim count, avg claim.
-
-    Mirrors compute_lob_summary + the rollup's `Avg Claim = Total / Count`
-    with 0.0 when count = 0 (streamlit_e2e_app.py:1014).
-    """
-    paid = money_coerce_col(F.col(paid_col))
-    alae = money_coerce_col(F.col(alae_col)) if alae_col else F.lit(0).cast("decimal(18,2)")
-    agg = df.groupBy(F.col(lob_col).alias("lob")).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(paid).cast("decimal(18,2)").alias("total_paid_loss"),
-        F.sum(alae).cast("decimal(18,2)").alias("total_alae"),
-        F.count(F.when(F.col(claim_col).isNotNull() & (F.trim(claim_col) != ""), 1)).alias(
-            "claim_count"
-        ),
-    )
-    return agg.withColumn(
-        "avg_claim",
-        F.when(F.col("claim_count") > 0,
-               (F.col("total_paid_loss") / F.col("claim_count")).cast("decimal(18,2)"))
-        .otherwise(F.lit(0).cast("decimal(18,2)")),
-    )
-
-
 def top_claims_by_loss(df: DataFrame, n: int = 10, loss_col: str = "amount",
                        claim_col: str = "claim_number") -> DataFrame:
     """A3 — groupBy(claim).sum(loss) → top-N (streamlit_e2e_app.py:1058).
@@ -51,17 +27,6 @@ def top_claims_by_loss(df: DataFrame, n: int = 10, loss_col: str = "amount",
         .groupBy(F.col(claim_col).alias("claim_number"))
         .agg(F.sum(money_coerce_col(F.col(loss_col))).cast("decimal(18,2)").alias("total_loss"))
         .orderBy(F.col("total_loss").desc(), F.col("claim_number").asc())
-        .limit(n)
-    )
-
-
-def claim_frequency(df: DataFrame, n: int = 20, claim_col: str = "claim_number") -> DataFrame:
-    """A4 — duplicate-claim frequency top-N (streamlit_e2e_app.py:1087-1089)."""
-    return (
-        df.filter(F.col(claim_col).isNotNull())
-        .groupBy(F.col(claim_col).alias("claim_number"))
-        .agg(F.count(F.lit(1)).alias("n_records"))
-        .orderBy(F.col("n_records").desc(), F.col("claim_number").asc())
         .limit(n)
     )
 

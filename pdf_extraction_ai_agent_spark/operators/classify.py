@@ -1,4 +1,4 @@
-"""C1/C2/C3 — LOB classification as native Catalyst expressions (no UDF).
+"""C1/C2 — LOB classification as native Catalyst expressions (no UDF).
 
 Reference:
 - C1 single-label keyword scorer  claude_pdf_extractor.py:92-132
@@ -8,7 +8,6 @@ Reference:
 - C2 multi-label membership       text_lob_llm_extractor.py:231-244
   (padded-token membership; ['AUTO'] fallback — the production path runs
   with use_llm=False, text_lob_llm_extractor.py:556)
-- C3 LOB from a name              excel_lob_consolidator.py:10-20
 
 Occurrence counting is `size(split(upper(text), kw)) - 1` — pure codegen;
 at 100 TB this stays inside whole-stage codegen with zero Python cost.
@@ -73,15 +72,3 @@ def classify_lobs_c2(text: Column) -> Column:
     arr = F.array_compact(F.array(*hits))
     return F.when(F.size(arr) > 0, arr).otherwise(F.array(F.lit("AUTO")))
 
-
-def classify_lob_from_name(name: Column) -> Column:
-    """C3 (excel_lob_consolidator.py:10-20): keyword membership on an
-    uppercased sheet/file name."""
-    up = F.upper(name)
-    return (
-        F.when(up.contains("AUTO"), F.lit("AUTO"))
-        .when(up.contains("WC") | up.contains("WORKER"), F.lit("WC"))
-        .when(up.contains("GL") | up.contains("GENERAL") | up.contains("LIABILITY"), F.lit("GL"))
-        .when(up.contains("PROPERTY"), F.lit("PROPERTY"))
-        .otherwise(F.lit("UNKNOWN"))
-    )

@@ -643,8 +643,7 @@ _AES_RCON = (0x01, 0x02, 0x04, 0x08, 0x10, 0x20, 0x40, 0x80, 0x1B, 0x36)
 def _aes_expand_key(key: bytes) -> list[bytes]:
     """Key schedule for AES-128 (Nk=4, 44 words) or AES-256 (Nk=8, 60
     words — the extra SubWord at i % 8 == 4 per FIPS-197), returned as
-    FLAT 16-byte round keys so AddRoundKey is a plain zip (the per-byte
-    `w[i // 4][i % 4]` indexing showed up in the q56/q58 profiles)."""
+    flat 16-byte round keys (``_aes_enc_words`` packs them into words)."""
     nk = len(key) // 4
     nr = nk + 6
     w = [list(key[4 * i : 4 * i + 4]) for i in range(nk)]
@@ -677,61 +676,19 @@ def _gmul_tab(c: int) -> bytes:
     return bytes(out)
 
 
-_M9, _M11, _M13, _M14 = _gmul_tab(9), _gmul_tab(11), _gmul_tab(13), _gmul_tab(14)
-_INV_SHIFT = [(r + 4 * ((c - r) % 4)) for c in range(4) for r in range(4)]
-
-
-def _aes_decrypt_block(w: list[bytes], block: bytes) -> bytes:
-    nr = len(w) - 1
-    s = [b ^ k for b, k in zip(block, w[nr])]
-    for rnd in range(nr - 1, 0, -1):
-        s = [_AES_INV_SBOX[s[_INV_SHIFT[i]]] for i in range(16)]
-        s = [b ^ k for b, k in zip(s, w[rnd])]
-        t = [0] * 16
-        for c in range(4):
-            a0, a1, a2, a3 = s[4 * c : 4 * c + 4]
-            t[4 * c + 0] = _M14[a0] ^ _M11[a1] ^ _M13[a2] ^ _M9[a3]
-            t[4 * c + 1] = _M9[a0] ^ _M14[a1] ^ _M11[a2] ^ _M13[a3]
-            t[4 * c + 2] = _M13[a0] ^ _M9[a1] ^ _M14[a2] ^ _M11[a3]
-            t[4 * c + 3] = _M11[a0] ^ _M13[a1] ^ _M9[a2] ^ _M14[a3]
-        s = t
-    s = [_AES_INV_SBOX[s[_INV_SHIFT[i]]] for i in range(16)]
-    return bytes(b ^ k for b, k in zip(s, w[0]))
-
-
-_AES_SHIFT = [(r + 4 * ((c + r) % 4)) for c in range(4) for r in range(4)]
 _M2, _M3 = _gmul_tab(2), _gmul_tab(3)
-
-
-def _aes_encrypt_block(w: list[bytes], block: bytes) -> bytes:
-    """Forward cipher — needed by the R6 Algorithm 2.B password hash
-    (which AES-ENCRYPTS its rolling state), not for writing files."""
-    nr = len(w) - 1
-    s = [b ^ k for b, k in zip(block, w[0])]
-    for rnd in range(1, nr + 1):
-        s = [_AES_SBOX[b] for b in s]
-        s = [s[_AES_SHIFT[i]] for i in range(16)]
-        if rnd < nr:
-            t = [0] * 16
-            for c in range(4):
-                a0, a1, a2, a3 = s[4 * c : 4 * c + 4]
-                t[4 * c + 0] = _M2[a0] ^ _M3[a1] ^ a2 ^ a3
-                t[4 * c + 1] = a0 ^ _M2[a1] ^ _M3[a2] ^ a3
-                t[4 * c + 2] = a0 ^ a1 ^ _M2[a2] ^ _M3[a3]
-                t[4 * c + 3] = _M3[a0] ^ a1 ^ a2 ^ _M2[a3]
-            s = t
-        s = [b ^ k for b, k in zip(s, w[rnd])]
-    return bytes(s)
+_M9, _M11, _M13, _M14 = _gmul_tab(9), _gmul_tab(11), _gmul_tab(13), _gmul_tab(14)
 
 
 # --- 32-bit T-table AES (r8 fast path) --------------------------------------
 # FIPS-197 expressed as the classic four-table formulation: per round each
 # state COLUMN is one big-endian u32 and SubBytes+ShiftRows+MixColumns
-# collapse into 4 table lookups + 4 xors per column.  Profiled ~8-10x the
-# per-byte table walk above on Algorithm 2.B (64+ rounds x ~128 CBC blocks
-# per KDF call) and on the AESV2/AESV3 stream paths.  The byte-state
-# functions above stay as the readable reference; equality between the two
-# is pinned by tests/test_aes_ttable.py.
+# collapse into 4 table lookups + 4 xors per column.  Profiled ~8-10x a
+# per-byte table walk on Algorithm 2.B (64+ rounds x ~128 CBC blocks per
+# KDF call) and on the AESV2/AESV3 stream paths.  This is the pure-Python
+# fallback behind OpenSSL; tests/test_aes_ttable.py pins it against the
+# writer's independent byte-form cipher (fixtures/minipdf.py) and the
+# FIPS-197 vectors.
 
 _TE0 = tuple(
     (_M2[s] << 24) | (s << 16) | (s << 8) | _M3[s] for s in _AES_SBOX
@@ -2296,7 +2253,7 @@ def tokenize_pdf_runs(
     sheared/singular/operand-less cm, unbalanced Q, sheared/singular Tm —
     and as a safety net, any page whose content shows text (Tj/TJ
     present) that the walk failed to capture. Feeds both reading-order
-    assembly (assemble_reading_order) and detect_lattice_tables' cell
+    assembly (assemble_reading_order) and lattice_cells_from_docs' cell
     placement on REAL PDF bytes."""
     if not data.startswith(b"%PDF-"):
         return None

@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
@@ -178,38 +178,39 @@ def run_with_lineage(
             # plans are free to drop bookkeeping columns; part_id is a pure
             # function of the bucket key so re-derive it for the write
             plan = with_part_id(plan, n_buckets=n_buckets, key_col=key_col)
+        # per-part rows and errors are counted while the plan is written:
+        # no second job, and no re-read of out_path (which holds no files
+        # to infer a schema from while every group so far was empty)
+        is_err = (
+            F.col("error").isNotNull() if "error" in plan.columns else F.lit(False)
+        )
+        counters = []
+        for pid in group:
+            in_part = F.col("part_id") == pid
+            counters += [
+                F.count(F.when(in_part, 1)).alias(f"n_{pid}"),
+                F.count(F.when(in_part & is_err, 1)).alias(f"e_{pid}"),
+            ]
+        obs = Observation()
         (
-            plan
+            plan.observe(obs, *counters)
             .write.format(fmt)
             .mode("overwrite")
             .partitionBy("part_id")
             .save(out_path)
         )
         wall_ms = int((time.monotonic() - t0) * 1000)
-        # row counts come from the committed output (parquet footers /
-        # Iceberg manifests — metadata-only, no recompute of the UDF stage)
-        committed = (
-            spark.read.format(fmt).load(out_path).filter(F.col("part_id").isin(group))
-        )
-        err_agg = (
-            [F.count(F.when(F.col("error").isNotNull(), 1)).alias("n_err")]
-            if "error" in committed.columns
-            else [F.lit(0).alias("n_err")]
-        )
-        counted = committed.groupBy("part_id").agg(
-            F.count(F.lit(1)).alias("n"), *err_agg
-        )
-        per_part = {r["part_id"]: (r["n"], r["n_err"]) for r in counted.collect()}
-        n_rows = sum(n for n, _ in per_part.values())
-        n_errors = sum(e for _, e in per_part.values())
+        counts = obs.get
+        n_rows = sum(counts[f"n_{pid}"] for pid in group)
+        n_errors = sum(counts[f"e_{pid}"] for pid in group)
         tps = n_rows / max(wall_ms / 1000.0, 1e-9)
         store.append(
             [
                 {
                     "run_group": run_group,
                     "part_id": pid,
-                    "n_rows": per_part.get(pid, (0, 0))[0],
-                    "n_errors": per_part.get(pid, (0, 0))[1],
+                    "n_rows": counts[f"n_{pid}"],
+                    "n_errors": counts[f"e_{pid}"],
                     "wall_ms": wall_ms,
                     "turns_per_sec": tps,
                 }

@@ -16,11 +16,6 @@ from pyspark.sql import functions as F
 CLI_CSV_COLUMNS = ["file_path", "claim_number", "name", "date", "confidence", "error"]
 
 
-def write_json(df: DataFrame, path: str) -> None:
-    """S14 — one JSON object per record (cli.py:51-57)."""
-    df.write.mode("overwrite").json(path)
-
-
 def write_csv(df: DataFrame, path: str, columns: list[str] | None = None) -> None:
     """S15 — fixed column order, header row (cli.py:58-73). Missing
     columns are ''-filled like the reference's dict.get(col, '')."""

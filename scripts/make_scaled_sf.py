@@ -46,8 +46,18 @@ def main() -> None:
     spans: dict[str, int] = {}
     for name, keys in FACT_KEYS.items():
         t = pq.read_table(f"{src}/{name}.parquet", columns=[keys[0]])
-        spans[name] = int(pc.max(t[keys[0]]).as_py()) + 1
+        key_max = pc.max(t[keys[0]]).as_py()
+        if key_max is None:
+            raise SystemExit(f"{name}: fact table has no {keys[0]} values to replicate")
+        spans[name] = int(key_max) + 1
     for name, parent in SPAN_FROM.items():
+        # a key at or past the parent's span would land copy k's rows in
+        # copy k+1's key space and create spurious joins
+        if spans[name] > spans[parent]:
+            raise SystemExit(
+                f"{name}: max {FACT_KEYS[name][0]} {spans[name] - 1} is outside "
+                f"the {parent} key span {spans[parent]}"
+            )
         spans[name] = spans[parent]
 
     for fname in sorted(os.listdir(src)):
@@ -66,7 +76,7 @@ def main() -> None:
             for key in FACT_KEYS[name]:
                 field_t = c.schema.field(key).type
                 shifted = pc.cast(
-                    pc.add(c[key], pa.scalar(k * span, type=field_t)), field_t
+                    pc.add_checked(c[key], pa.scalar(k * span, type=field_t)), field_t
                 )
                 c = c.set_column(c.schema.get_field_index(key), key, shifted)
             copies.append(c)

@@ -36,6 +36,17 @@ def golden_pdf(transcripts_pdf):
     return extract_turn_frame(transcripts_pdf)
 
 
+@pytest.fixture()
+def no_openssl(monkeypatch):
+    """Force the engine (pdftext) and the writer (minipdf) onto their
+    pure-Python ciphers."""
+    from pdf_extraction_ai_agent_spark.fixtures import minipdf
+    from pdf_extraction_ai_agent_spark.operators import pdftext
+
+    monkeypatch.setattr(pdftext, "_OPENSSL", False)
+    monkeypatch.setattr(minipdf, "_W_OPENSSL", False)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

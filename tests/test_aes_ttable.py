@@ -1,9 +1,10 @@
 """r8 optimization pin: the 32-bit T-table AES fast paths (engine
 big-endian words, writer little-endian words) are bit-identical to the
-per-byte reference ciphers they sped up, on both key sizes, and the two
-independent codebases still agree with each other (twin invariant —
-neither imports the other's logic; this test is the only place their
-outputs meet)."""
+writer's per-byte reference cipher and to the FIPS-197 vectors, on both
+key sizes.  Every test runs under ``no_openssl``, so the pure-Python
+paths are what is compared, not the OpenSSL delegation.  The engine and
+the writer are independent codebases (twin invariant — neither imports
+the other's logic; this test is the only place their outputs meet)."""
 
 from __future__ import annotations
 
@@ -13,17 +14,8 @@ from pdf_extraction_ai_agent_spark.fixtures import minipdf as mp
 from pdf_extraction_ai_agent_spark.operators import pdftext as pt
 
 
-def _ref_cbc_encrypt_engine(key: bytes, iv: bytes, data: bytes) -> bytes:
-    w = pt._aes_expand_key(key)
-    prev, out = iv, bytearray()
-    for at in range(0, len(data), 16):
-        blk = bytes(a ^ b for a, b in zip(data[at : at + 16], prev))
-        prev = pt._aes_encrypt_block(w, blk)
-        out += prev
-    return bytes(out)
-
-
-def _ref_cbc_encrypt_writer(key: bytes, iv: bytes, data: bytes) -> bytes:
+def _ref_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+    """CBC over the writer's byte-form block cipher."""
     rks = mp._aes_round_keys(key)
     prev, out = iv, bytearray()
     for at in range(0, len(data), 16):
@@ -33,21 +25,20 @@ def _ref_cbc_encrypt_writer(key: bytes, iv: bytes, data: bytes) -> bytes:
     return bytes(out)
 
 
-def test_ttable_aes_matches_byte_reference_and_twin():
+def test_ttable_aes_matches_byte_reference_and_twin(no_openssl):
     rnd = random.Random(1234)
     for _ in range(40):
         klen = rnd.choice([16, 32])
         key = bytes(rnd.randrange(256) for _ in range(klen))
         iv = bytes(rnd.randrange(256) for _ in range(16))
         data = bytes(rnd.randrange(256) for _ in range(16 * rnd.randrange(1, 12)))
-        ref = _ref_cbc_encrypt_engine(key, iv, data)
+        ref = _ref_cbc_encrypt(key, iv, data)
         assert pt._aes_cbc_encrypt_nopad(key, iv, data) == ref
         assert mp._aes_cbc_core(key, iv, data) == ref
-        assert _ref_cbc_encrypt_writer(key, iv, data) == ref
         assert pt._aes_cbc_decrypt_nopad(key, iv, ref) == data
 
 
-def test_ttable_aes_stream_payload_roundtrip():
+def test_ttable_aes_stream_payload_roundtrip(no_openssl):
     rnd = random.Random(99)
     for klen in (16, 32):
         key = bytes(rnd.randrange(256) for _ in range(klen))
@@ -58,8 +49,9 @@ def test_ttable_aes_stream_payload_roundtrip():
             assert pt._aes_cbc_decrypt(key, enc) == data
 
 
-def test_fips197_vectors():
-    """FIPS-197 Appendix C known-answer vectors through both fast paths."""
+def test_fips197_vectors(no_openssl):
+    """FIPS-197 Appendix C known-answer vectors through both fast paths
+    and the writer's byte-form reference."""
     key128 = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     pt128 = bytes.fromhex("00112233445566778899aabbccddeeff")
     ct128 = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
@@ -69,6 +61,7 @@ def test_fips197_vectors():
     ct256 = bytes.fromhex("8ea2b7ca516745bfeafc49904b496089")
     zero_iv = bytes(16)
     for key, ct in ((key128, ct128), (key256, ct256)):
+        assert _ref_cbc_encrypt(key, zero_iv, pt128) == ct
         assert pt._aes_cbc_encrypt_nopad(key, zero_iv, pt128) == ct
         assert mp._aes_cbc_core(key, zero_iv, pt128) == ct
         assert pt._aes_cbc_decrypt_nopad(key, zero_iv, ct) == pt128

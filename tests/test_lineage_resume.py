@@ -15,6 +15,25 @@ def _plan(df):
     return df.select("part_id", "conv_id", "turn_idx", F.length("text").alias("n_chars"))
 
 
+def _assert_lineage_equals_recount(spark, out, lin, run_group):
+    """The lineage rows' observed per-part counts equal a recount of the
+    committed output (parts with no output rows record zero)."""
+    committed = spark.read.parquet(out)
+    err = (
+        F.count(F.when(F.col("error").isNotNull(), 1))
+        if "error" in committed.columns
+        else F.lit(0).cast("long")
+    )
+    recount = {
+        r.part_id: (r.n, r.e)
+        for r in committed.groupBy("part_id").agg(F.count(F.lit(1)).alias("n"), err.alias("e")).collect()
+    }
+    lineage = spark.read.parquet(lin).filter(F.col("run_group") == run_group).collect()
+    assert lineage
+    for r in lineage:
+        assert (r.n_rows, r.n_errors) == recount.get(r.part_id, (0, 0)), r.part_id
+
+
 def test_resume_skips_completed_partitions(spark, transcripts_df, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("lineage"))
     out, lin = os.path.join(base, "out"), os.path.join(base, "lineage")
@@ -38,6 +57,39 @@ def test_resume_skips_completed_partitions(spark, transcripts_df, tmp_path_facto
     lineage_rows = spark.read.parquet(lin).collect()
     assert {r.part_id for r in lineage_rows} == set(range(8))
     assert all(r.turns_per_sec > 0 for r in lineage_rows)
+    assert sum(g["rows"] for g in m1["groups"]) == n_expected
+    _assert_lineage_equals_recount(spark, out, lin, "g1")
+
+
+def test_empty_first_bucket_group(spark, transcripts_df, tmp_path_factory):
+    """A first bucket group with no rows commits nothing and records zero
+    counts; the later groups still count from their own writes (nothing
+    re-reads an output directory that has no files yet)."""
+    base = str(tmp_path_factory.mktemp("lineage_empty"))
+    out, lin = os.path.join(base, "out"), os.path.join(base, "lineage")
+    df = (
+        with_part_id(transcripts_df, n_buckets=8)
+        .filter(~F.col("part_id").isin([0, 1]))
+        .drop("part_id")
+    )
+    n_expected = df.count()
+    assert n_expected > 0
+
+    def plan(d):
+        return _plan(d).withColumn(
+            "error", F.when(F.col("turn_idx") % 3 == 0, F.lit("poison"))
+        )
+
+    m = run_with_lineage(spark, df, plan, out, lin, run_group="g4", n_buckets=8,
+                         bucket_group_size=2)
+    assert m["groups"][0]["part_ids"] == [0, 1]
+    assert (m["groups"][0]["rows"], m["groups"][0]["errors"]) == (0, 0)
+    assert sum(g["rows"] for g in m["groups"]) == n_expected
+    assert sum(g["errors"] for g in m["groups"]) == (
+        df.filter(F.col("turn_idx") % 3 == 0).count()
+    ) > 0
+    assert spark.read.parquet(out).count() == n_expected
+    _assert_lineage_equals_recount(spark, out, lin, "g4")
 
 
 def test_partial_failure_resume(spark, transcripts_df, tmp_path_factory):
@@ -65,6 +117,9 @@ def test_partial_failure_resume(spark, transcripts_df, tmp_path_factory):
     )
     assert m["skipped_buckets"] == 2
     assert spark.read.parquet(out).count() == transcripts_df.count()
+    assert sum(g["rows"] for g in m["groups"]) == (
+        df.filter(~F.col("part_id").isin([0, 1])).count()
+    )
 
 
 def test_cached_max_conv_rows_stat_reuse(spark, transcripts_df, tmp_path_factory):
@@ -120,6 +175,7 @@ def test_job_over_mixed_real_pdf_corpus(spark, tmp_path_factory):
     )
     assert sum(g["rows"] for g in m["groups"]) == len(pdf)
     assert all(g["errors"] == 0 for g in m["groups"])
+    _assert_lineage_equals_recount(spark, out, lin, "mix")
     m2 = run_with_lineage(
         spark, df,
         lambda d: extract_pipeline(d, salt_buckets="auto", with_fields=False,
