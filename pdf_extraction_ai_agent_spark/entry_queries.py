@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import spec
+from .entry_registry import register
 from .functions.dates import normalize_date_col
 from .functions.fields import (
     claim_number_col,
@@ -186,6 +187,9 @@ FROM docs
 """
 
 
+register("q01_parse_fields", q01_parse_fields, _q01_sql())
+
+
 # ---------------------------------------------------------------------------
 # q02 — X1/F3/F4: blank-line record split over multi-claim documents
 # ---------------------------------------------------------------------------
@@ -269,6 +273,9 @@ WHERE COALESCE(claim_number, amount, reason, loss_date) IS NOT NULL
 """
 
 
+register("q02_record_split", q02_record_split, _q02_sql())
+
+
 # ---------------------------------------------------------------------------
 # q03 — C1 keyword-count argmax classification
 # ---------------------------------------------------------------------------
@@ -318,6 +325,9 @@ FROM scored
 """
 
 
+register("q03_classify_lob", q03_classify_lob, _q03_sql())
+
+
 # ---------------------------------------------------------------------------
 # q04 — U4 money coercion + exact decimal aggregation
 # ---------------------------------------------------------------------------
@@ -351,6 +361,7 @@ SELECT l_returnflag AS returnflag,
 FROM lineitem
 GROUP BY l_returnflag
 """
+register("q04_money_coerce", q04_money_coerce, _Q04_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -387,6 +398,7 @@ WITH raws AS (
 SELECT doc_key, raw_date, {_DUCK_DATE_LADDER.format(v="raw_date")} AS norm_date
 FROM raws
 """
+register("q05_date_normalize", q05_date_normalize, _Q05_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -446,6 +458,9 @@ FROM agg
 """
 
 
+register("q06_lob_summary", q06_lob_summary, _q06_sql())
+
+
 def q07_top_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.aggregate import top_claims_by_loss
 
@@ -464,6 +479,9 @@ GROUP BY claim_number
 ORDER BY total_loss DESC, claim_number ASC
 LIMIT 10
 """
+
+
+register("q07_top_claims", q07_top_claims, _q07_sql())
 
 
 def q08_claim_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -488,6 +506,7 @@ GROUP BY 1
 ORDER BY n_records DESC, claim_number ASC
 LIMIT 20
 """
+register("q08_claim_frequency", q08_claim_frequency, _Q08_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -522,6 +541,7 @@ WHERE contains(CAST(c_name AS VARCHAR), '1')
   AND contains(regexp_replace(lower(trim(n_name)), '[^a-z0-9]', '', 'g'), 'a')
   AND c_mktsegment IN ('AUTOMOBILE', 'MACHINERY')
 """
+register("q09_registry_search", q09_registry_search, _Q09_SQL)
 
 
 def q10_date_range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,36 +577,5 @@ FROM t
 WHERE (eff_date BETWEEN TIMESTAMP '1994-01-01' AND TIMESTAMP '1996-12-31')
    OR eff_date IS NULL
 """
+register("q10_date_range_filter", q10_date_range_filter, _Q10_SQL)
 
-
-# ---------------------------------------------------------------------------
-# registry of pack 1 (core reference operators)
-# ---------------------------------------------------------------------------
-
-CORE_QUERIES = {
-    "q01_parse_fields": q01_parse_fields,
-    "q02_record_split": q02_record_split,
-    "q03_classify_lob": q03_classify_lob,
-    "q04_money_coerce": q04_money_coerce,
-    "q05_date_normalize": q05_date_normalize,
-    "q06_lob_summary": q06_lob_summary,
-    "q07_top_claims": q07_top_claims,
-    "q08_claim_frequency": q08_claim_frequency,
-    "q09_registry_search": q09_registry_search,
-    "q10_date_range_filter": q10_date_range_filter,
-}
-
-
-def core_oracles() -> dict[str, str]:
-    return {
-        "q01_parse_fields": _q01_sql(),
-        "q02_record_split": _q02_sql(),
-        "q03_classify_lob": _q03_sql(),
-        "q04_money_coerce": _Q04_SQL,
-        "q05_date_normalize": _Q05_SQL,
-        "q06_lob_summary": _q06_sql(),
-        "q07_top_claims": _q07_sql(),
-        "q08_claim_frequency": _Q08_SQL,
-        "q09_registry_search": _Q09_SQL,
-        "q10_date_range_filter": _Q10_SQL,
-    }

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _spread, _t
+from .entry_registry import register
 from .functions.hashing import (
     MERSENNE_P,
     MINHASH_AB,
@@ -47,16 +49,10 @@ _SHINGLES_SQL = (
 )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def _emb_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings, spread to all cores (one row group = one input split;
     same fix as _docs below — the quantize/signature kernels otherwise run
     in a single task)."""
-    from .entry_queries import _spread
-
     return _spread(_t(spark, sf_dir, "embeddings"), "vec_id")
 
 
@@ -86,6 +82,7 @@ SELECT {_md5l(_NORM_SQL.format(v='text'))} AS content_hash,
 FROM documents
 GROUP BY 1
 """
+register("q11_dedup_exact", q11_dedup_exact, _Q11_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -165,6 +162,9 @@ GROUP BY doc_id
 """
 
 
+register("q13_minhash_signatures", q13_minhash_signatures, _q13_sql())
+
+
 def q14_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.5, hash_impl="md5")
 
@@ -210,6 +210,11 @@ WHERE CAST(({matches}) AS DOUBLE) / {NUM_PERMS} >= 0.5
 """
 
 
+register("q14_minhash_lsh_pairs", q14_minhash_lsh_pairs, _q14_sql())
+# q12 registers last: its oracle is built from q13's SQL and _band_rows_sql
+register("q12_jaccard_pairs", q12_jaccard_pairs, _q12_sql())
+
+
 # ---------------------------------------------------------------------------
 # q15 — simhash signatures
 # ---------------------------------------------------------------------------
@@ -240,6 +245,9 @@ SELECT doc_id,
 FROM sums
 GROUP BY doc_id
 """
+
+
+register("q15_simhash", q15_simhash, _q15_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -276,6 +284,7 @@ ranked AS (
 )
 SELECT query_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= 10
 """
+register("q16_ann_cosine_topk", q16_ann_cosine_topk, _Q16_SQL)
 
 
 def lsh_sig_ctes(
@@ -356,6 +365,9 @@ SELECT query_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= 10
 """
 
 
+register("q17_ann_cosine_lsh", q17_ann_cosine_lsh, _q17_sql())
+
+
 # ---------------------------------------------------------------------------
 # q18 — language ID, q19 — quality scores, q20 — token counts,
 # q21 — fingerprints
@@ -384,6 +396,9 @@ SELECT doc_id,
             ELSE 'und' END AS lang_guess
 FROM documents
 """
+
+
+register("q18_lang_id", q18_lang_id, _q18_sql())
 
 
 def q19_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -418,6 +433,9 @@ FROM ratios
 """
 
 
+register("q19_quality_scores", q19_quality_scores, _q19_sql())
+
+
 def q20_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.token_counts(_docs(spark, sf_dir))
 
@@ -429,6 +447,7 @@ SELECT doc_id,
        length(text) AS n_chars
 FROM documents
 """
+register("q20_token_counts", q20_token_counts, _Q20_SQL)
 
 
 def q21_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,6 +461,9 @@ SELECT doc_id,
        list_aggregate(list_transform({_SHINGLES_SQL.replace('w', 'w')}, s -> {_md5l('s')}), 'min') AS min_shingle_hash
 FROM (SELECT doc_id, text, {_WORDS_SQL.format(v='text')} AS w FROM documents)
 """
+
+
+register("q21_fingerprints", q21_fingerprints, _q21_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -473,6 +495,7 @@ SELECT doc_id AS media_id,
             ELSE 1 + (CAST(('0x' || substring(md5(text), 1, 8)) AS BIGINT) % 300) END AS INTEGER) AS frame_count
 FROM documents
 """
+register("q22_multimodal_meta", q22_multimodal_meta, _Q22_SQL)
 
 
 def q23_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -493,38 +516,4 @@ SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
 FROM events
 GROUP BY 1, 2
 """
-
-
-EXT_QUERIES = {
-    "q11_dedup_exact": q11_dedup_exact,
-    "q12_jaccard_pairs": q12_jaccard_pairs,
-    "q13_minhash_signatures": q13_minhash_signatures,
-    "q14_minhash_lsh_pairs": q14_minhash_lsh_pairs,
-    "q15_simhash": q15_simhash,
-    "q16_ann_cosine_topk": q16_ann_cosine_topk,
-    "q17_ann_cosine_lsh": q17_ann_cosine_lsh,
-    "q18_lang_id": q18_lang_id,
-    "q19_quality_scores": q19_quality_scores,
-    "q20_token_counts": q20_token_counts,
-    "q21_fingerprints": q21_fingerprints,
-    "q22_multimodal_meta": q22_multimodal_meta,
-    "q23_event_windows": q23_event_windows,
-}
-
-
-def ext_oracles() -> dict[str, str]:
-    return {
-        "q11_dedup_exact": _Q11_SQL,
-        "q12_jaccard_pairs": _q12_sql(),
-        "q13_minhash_signatures": _q13_sql(),
-        "q14_minhash_lsh_pairs": _q14_sql(),
-        "q15_simhash": _q15_sql(),
-        "q16_ann_cosine_topk": _Q16_SQL,
-        "q17_ann_cosine_lsh": _q17_sql(),
-        "q18_lang_id": _q18_sql(),
-        "q19_quality_scores": _q19_sql(),
-        "q20_token_counts": _Q20_SQL,
-        "q21_fingerprints": _q21_sql(),
-        "q22_multimodal_meta": _Q22_SQL,
-        "q23_event_windows": _Q23_SQL,
-    }
+register("q23_event_windows", q23_event_windows, _Q23_SQL)

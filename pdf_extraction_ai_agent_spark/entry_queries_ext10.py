@@ -23,16 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _t
 from .entry_queries_ext import _COS_SQL, _NORM_SQL, _WORDS_SQL, _docs, _md5l
-from .entry_queries_ext4 import _t, ivf_fit_ctes
+from .entry_queries_ext4 import ivf_fit_ctes
+from .entry_registry import register
 from .operators import curation, dedup, similarity, textstats, weburls
-
-EXT10_QUERIES: dict = {}
-_EXT10_ORACLES: dict = {}
-
-
-def ext10_oracles() -> dict[str, str]:
-    return dict(_EXT10_ORACLES)
 
 
 # ---------------------------------------------------------------------------
@@ -85,9 +80,7 @@ SELECT t.doc_id,
        CAST(t.n_chunks - coalesce(k.n_kept, 0) AS BIGINT) AS n_dropped
 FROM totals t LEFT JOIN kept_agg k USING (doc_id)
 """
-
-EXT10_QUERIES["q85_window_dedup"] = q85_window_dedup
-_EXT10_ORACLES["q85_window_dedup"] = _Q85_SQL
+register("q85_window_dedup", q85_window_dedup, _Q85_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -166,8 +159,7 @@ FROM canon
 """
 
 
-EXT10_QUERIES["q86_url_canonicalize"] = q86_url_canonicalize
-_EXT10_ORACLES["q86_url_canonicalize"] = _q86_sql()
+register("q86_url_canonicalize", q86_url_canonicalize, _q86_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -207,9 +199,7 @@ SELECT d.doc_id, d.lang, CAST(r.n_stratum AS BIGINT) AS n_stratum, r.rate_ppm
 FROM documents d JOIN rates r USING (lang)
 WHERE {_md5l("'tsamp:' || CAST(d.doc_id AS VARCHAR)")} % 1000000 < r.rate_ppm
 """
-
-EXT10_QUERIES["q87_temperature_sample"] = q87_temperature_sample
-_EXT10_ORACLES["q87_temperature_sample"] = _Q87_SQL
+register("q87_temperature_sample", q87_temperature_sample, _Q87_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -252,9 +242,7 @@ SELECT d.doc_id,
        CAST(coalesce(p.sum_ppm // p.n_trigrams, 0) AS BIGINT) AS mean_ppm
 FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
-
-EXT10_QUERIES["q88_trigram_lm_scores"] = q88_trigram_lm_scores
-_EXT10_ORACLES["q88_trigram_lm_scores"] = _Q88_SQL
+register("q88_trigram_lm_scores", q88_trigram_lm_scores, _Q88_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -288,9 +276,7 @@ SELECT CAST(rank AS INT) AS rank, word,
        CAST(n_docs AS BIGINT) AS n_docs
 FROM ranked WHERE rank <= 50
 """
-
-EXT10_QUERIES["q89_vocab_report"] = q89_vocab_report
-_EXT10_ORACLES["q89_vocab_report"] = _Q89_SQL
+register("q89_vocab_report", q89_vocab_report, _Q89_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -325,5 +311,4 @@ FROM {assigned} s LEFT JOIN dropped d ON s.vid = d.vid
 """
 
 
-EXT10_QUERIES["q90_semantic_dedup"] = q90_semantic_dedup
-_EXT10_ORACLES["q90_semantic_dedup"] = _q90_sql()
+register("q90_semantic_dedup", q90_semantic_dedup, _q90_sql())

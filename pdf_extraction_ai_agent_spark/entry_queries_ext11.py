@@ -28,15 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _t
 from .entry_queries_ext import _docs
+from .entry_registry import register
 from .operators import weburls
-
-EXT11_QUERIES: dict = {}
-_EXT11_ORACLES: dict = {}
-
-
-def ext11_oracles() -> dict[str, str]:
-    return dict(_EXT11_ORACLES)
 
 
 def _norm30(col):
@@ -112,9 +107,7 @@ SELECT doc_id,
        false AS needs_ocr
 FROM documents
 """
-
-EXT11_QUERIES["q91_html_skip_tags"] = q91_html_skip_tags
-_EXT11_ORACLES["q91_html_skip_tags"] = _Q91_SQL
+register("q91_html_skip_tags", q91_html_skip_tags, _Q91_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -184,9 +177,7 @@ SELECT doc_id,
        false AS needs_ocr
 FROM parts
 """
-
-EXT11_QUERIES["q92_html_table_pipe"] = q92_html_table_pipe
-_EXT11_ORACLES["q92_html_table_pipe"] = _Q92_SQL
+register("q92_html_table_pipe", q92_html_table_pipe, _Q92_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -248,8 +239,7 @@ FROM canon
 """
 
 
-EXT11_QUERIES["q93_html_link_hosts"] = q93_html_link_hosts
-_EXT11_ORACLES["q93_html_link_hosts"] = _q93_sql()
+register("q93_html_link_hosts", q93_html_link_hosts, _q93_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -292,8 +282,7 @@ FROM ranked WHERE rk <= {_Q94_K}
 """
 
 
-EXT11_QUERIES["q94_host_budget"] = q94_host_budget
-_EXT11_ORACLES["q94_host_budget"] = _q94_sql()
+register("q94_host_budget", q94_host_budget, _q94_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -322,8 +311,7 @@ FROM documents
 """
 
 
-EXT11_QUERIES["q95_corpus_shuffle"] = q95_corpus_shuffle
-_EXT11_ORACLES["q95_corpus_shuffle"] = _q95_sql()
+register("q95_corpus_shuffle", q95_corpus_shuffle, _q95_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -343,7 +331,6 @@ _EXT11_ORACLES["q95_corpus_shuffle"] = _q95_sql()
 def q96_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from .entry_queries_ext4 import _t
     from .operators import dedup
 
     full = _t(spark, sf_dir, "documents")
@@ -398,8 +385,7 @@ FROM labeled
 """
 
 
-EXT11_QUERIES["q96_cluster_representatives"] = q96_cluster_representatives
-_EXT11_ORACLES["q96_cluster_representatives"] = _q96_sql()
+register("q96_cluster_representatives", q96_cluster_representatives, _q96_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -449,18 +435,8 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-EXT11_QUERIES["q97_annotations_ignored"] = q97_annotations_ignored
-_EXT11_ORACLES["q97_annotations_ignored"] = _Q97_SQL
-
-
-def _register_pinned():
-    from .entry_queries_ext7 import PINNED_PAYLOAD_BUILDERS
-
-    PINNED_PAYLOAD_BUILDERS["q97_annotations_ignored"] = _payload_q97
-
-
-_register_pinned()
+register("q97_annotations_ignored", q97_annotations_ignored,
+         _Q97_SQL, pinned=_payload_q97)
 
 
 # ---------------------------------------------------------------------------
@@ -521,8 +497,7 @@ FROM v{n_merges}
 """
 
 
-EXT11_QUERIES["q98_bpe_merges"] = q98_bpe_merges
-_EXT11_ORACLES["q98_bpe_merges"] = _q98_sql()
+register("q98_bpe_merges", q98_bpe_merges, _q98_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -590,8 +565,7 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
 
 
-EXT11_QUERIES["q99_bpe_fertility"] = q99_bpe_fertility
-_EXT11_ORACLES["q99_bpe_fertility"] = _q99_sql()
+register("q99_bpe_fertility", q99_bpe_fertility, _q99_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -608,7 +582,6 @@ _EXT11_ORACLES["q99_bpe_fertility"] = _q99_sql()
 
 
 def q100_fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .entry_queries_ext4 import _t
     from .operators import curation, dedup
 
     full = _t(spark, sf_dir, "documents")
@@ -679,8 +652,7 @@ WHERE CAST(n_common AS DOUBLE) / (sa.n_words + sb.n_words - n_common) >= 0.8
 """
 
 
-EXT11_QUERIES["q100_fuzzy_decontamination"] = q100_fuzzy_decontamination
-_EXT11_ORACLES["q100_fuzzy_decontamination"] = _q100_sql()
+register("q100_fuzzy_decontamination", q100_fuzzy_decontamination, _q100_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -786,8 +758,7 @@ FROM base, vocab, dups, lang
 """
 
 
-EXT11_QUERIES["q101_corpus_snapshot"] = q101_corpus_snapshot
-_EXT11_ORACLES["q101_corpus_snapshot"] = _q101_sql()
+register("q101_corpus_snapshot", q101_corpus_snapshot, _q101_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -822,8 +793,7 @@ GROUP BY d.lang, g.lang_guess
 """
 
 
-EXT11_QUERIES["q102_langid_confusion"] = q102_langid_confusion
-_EXT11_ORACLES["q102_langid_confusion"] = _q102_sql()
+register("q102_langid_confusion", q102_langid_confusion, _q102_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -859,6 +829,4 @@ FROM documents
 WHERE len(text) > 0
 GROUP BY 1
 """
-
-EXT11_QUERIES["q103_length_histogram"] = q103_length_histogram
-_EXT11_ORACLES["q103_length_histogram"] = _Q103_SQL
+register("q103_length_histogram", q103_length_histogram, _Q103_SQL)

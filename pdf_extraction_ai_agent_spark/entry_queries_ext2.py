@@ -8,13 +8,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _t
+from .entry_registry import register
 from .operators import carrier, chunkmerge, normalize, pages, registry, wc_tabular
 from .operators.aggregate import field_accuracy
 from .operators.ordering import positional_pairing
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -50,6 +48,7 @@ SELECT doc_key,
        END AS carrier
 FROM docs
 """
+register("q24_carrier_from_text", q24_carrier_from_text, _Q24_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -92,6 +91,7 @@ SELECT doc_id,
        regexp_replace(regexp_replace(bodies[i + 1], '^\s+', ''), '\s+$', '') AS page_text
 FROM split, LATERAL (SELECT unnest(range(1, len(nums) + 1)) AS i) u
 """
+register("q25_split_pages", q25_split_pages, _Q25_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -133,6 +133,7 @@ SELECT doc_id,
 FROM chunks
 GROUP BY doc_id
 """
+register("q26_merge_chunks", q26_merge_chunks, _Q26_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -195,6 +196,7 @@ SELECT doc_id, row_pos,
        '' AS alae
 FROM rows_
 """
+register("q27_normalize_tables", q27_normalize_tables, _Q27_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -379,6 +381,9 @@ def q28_wc_tabular(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wc_tabular.wc_claims(doc, keep_cols=["doc_id"])
 
 
+register("q28_wc_tabular", q28_wc_tabular, _q28_sql())
+
+
 # ---------------------------------------------------------------------------
 # q29 — A5/W2 positional accuracy scoring
 # ---------------------------------------------------------------------------
@@ -412,6 +417,7 @@ SELECT ROUND(AVG(CASE WHEN o_orderkey % 10 = 0 THEN 0 ELSE 1 END), 3) AS claim_a
        ROUND(AVG(CASE WHEN o_orderkey % 7 = 0 THEN 0 ELSE 1 END), 3) AS date_acc
 FROM orders
 """
+register("q29_field_accuracy", q29_field_accuracy, _Q29_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -450,26 +456,4 @@ SELECT account, reg.lob, policy_number,
        emails.email
 FROM reg LEFT JOIN emails ON upper(reg.lob) = upper(emails.lob)
 """
-
-
-EXT2_QUERIES = {
-    "q24_carrier_from_text": q24_carrier_from_text,
-    "q25_split_pages": q25_split_pages,
-    "q26_merge_chunks": q26_merge_chunks,
-    "q27_normalize_tables": q27_normalize_tables,
-    "q28_wc_tabular": q28_wc_tabular,
-    "q29_field_accuracy": q29_field_accuracy,
-    "q30_recipients": q30_recipients,
-}
-
-
-def ext2_oracles() -> dict[str, str]:
-    return {
-        "q24_carrier_from_text": _Q24_SQL,
-        "q25_split_pages": _Q25_SQL,
-        "q26_merge_chunks": _Q26_SQL,
-        "q27_normalize_tables": _Q27_SQL,
-        "q28_wc_tabular": _q28_sql(),
-        "q29_field_accuracy": _Q29_SQL,
-        "q30_recipients": _Q30_SQL,
-    }
+register("q30_recipients", q30_recipients, _Q30_SQL)

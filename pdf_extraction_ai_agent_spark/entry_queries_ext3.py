@@ -6,12 +6,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _t
 from .entry_queries_ext2 import _paged_docs_spark, _PAGED_SQL
+from .entry_registry import register
 from .operators import aggregate, chunking, grid, pages
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -73,6 +71,7 @@ SELECT table_id AS sheet,
 FROM merged
 GROUP BY table_id
 """
+register("q31_grid_pipe_text", q31_grid_pipe_text, _Q31_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -105,6 +104,7 @@ SELECT doc_id, chunk_idx,
          - chunk_idx * {_CHUNK_MAX - _CHUNK_OVR} AS chunk_len
 FROM idx
 """
+register("q32_chunk_text", q32_chunk_text, _Q32_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -146,6 +146,7 @@ SELECT doc, COUNT(*) AS n_pages,
 FROM stats
 GROUP BY doc
 """
+register("q33_page_analysis", q33_page_analysis, _Q33_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -194,6 +195,7 @@ SELECT strategy, COUNT(*) AS attempts,
 FROM routed
 GROUP BY strategy
 """
+register("q34_strategy_counters", q34_strategy_counters, _Q34_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -247,20 +249,4 @@ FROM hits
 """
 
 
-EXT3_QUERIES = {
-    "q31_grid_pipe_text": q31_grid_pipe_text,
-    "q32_chunk_text": q32_chunk_text,
-    "q33_page_analysis": q33_page_analysis,
-    "q34_strategy_counters": q34_strategy_counters,
-    "q35_classify_lobs_multi": q35_classify_lobs_multi,
-}
-
-
-def ext3_oracles() -> dict[str, str]:
-    return {
-        "q31_grid_pipe_text": _Q31_SQL,
-        "q32_chunk_text": _Q32_SQL,
-        "q33_page_analysis": _Q33_SQL,
-        "q34_strategy_counters": _Q34_SQL,
-        "q35_classify_lobs_multi": _q35_sql(),
-    }
+register("q35_classify_lobs_multi", q35_classify_lobs_multi, _q35_sql())

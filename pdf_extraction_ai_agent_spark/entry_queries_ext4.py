@@ -6,21 +6,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .entry_queries_ext import _COS_SQL, _md5l, lsh_sig_ctes
+from .entry_queries import _t
+from .entry_queries_ext import _COS_SQL, _emb_spread, _md5l, lsh_sig_ctes
+from .entry_registry import register
 from .operators import sessions, similarity
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings, spread to all cores (one row group = one input split —
-    the per-batch signature/quantize kernels otherwise serialize onto a
-    single core; same fix as entry_queries._spread / _docs)."""
-    from .entry_queries import _spread
-
-    return _spread(_t(spark, sf_dir, "embeddings"), "vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -38,7 +27,7 @@ def q36_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # demo geometry pinned: the DuckDB twin replays 16 planes × 2-bit
     # bands, and the low demo threshold needs the wide-recall buckets
     return similarity.embedding_near_dup_pairs(
-        _emb(spark, sf_dir), threshold=_NEARDUP_T,
+        _emb_spread(spark, sf_dir), threshold=_NEARDUP_T,
         n_planes=similarity.N_PLANES, band_bits=similarity.BAND_BITS,
     )
 
@@ -58,6 +47,9 @@ WHERE {cos} >= {_NEARDUP_T}
 """
 
 
+register("q36_embedding_near_dups", q36_embedding_near_dups, _q36_sql())
+
+
 # ---------------------------------------------------------------------------
 # q37 — IVF coarse-quantizer assignments (the ANN scale-path partitioner)
 # ---------------------------------------------------------------------------
@@ -67,7 +59,7 @@ def q37_ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded integer k-means centroids (similarity._ivf_fit_centroids) +
     max-cosine assignment; the DuckDB oracle unrolls the same Lloyd
     iterations in exact arithmetic."""
-    return similarity.ivf_assignments(_emb(spark, sf_dir), n_centroids=16)
+    return similarity.ivf_assignments(_emb_spread(spark, sf_dir), n_centroids=16)
 
 
 def ivf_fit_ctes(n_centroids: int = 16) -> tuple[str, str, str]:
@@ -132,6 +124,9 @@ SELECT vid AS vec_id, centroid_id, cosine AS centroid_cosine FROM {assigned}
 """
 
 
+register("q37_ivf_assignments", q37_ivf_assignments, _q37_sql())
+
+
 # ---------------------------------------------------------------------------
 # q84 — IVF probe-pruned ANN search (the scale-path query on top of q37)
 # ---------------------------------------------------------------------------
@@ -150,7 +145,7 @@ def q84_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — so the PRUNING itself is oracle-checked, not just the
     final neighbor set."""
     return similarity.cosine_topk_ivf(
-        _emb(spark, sf_dir), query_ids=_IVF_QUERY_IDS, k=10,
+        _emb_spread(spark, sf_dir), query_ids=_IVF_QUERY_IDS, k=10,
         n_centroids=16, nprobe=_IVF_NPROBE,
     )
 
@@ -184,6 +179,9 @@ ranked AS (
 )
 SELECT query_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= {k}
 """
+
+
+register("q84_ivf_probe_topk", q84_ivf_probe_topk, _q84_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -227,20 +225,4 @@ SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
 FROM numbered
 GROUP BY user_id, session_seq
 """
-
-
-EXT4_QUERIES = {
-    "q36_embedding_near_dups": q36_embedding_near_dups,
-    "q37_ivf_assignments": q37_ivf_assignments,
-    "q38_sessionize": q38_sessionize,
-    "q84_ivf_probe_topk": q84_ivf_probe_topk,
-}
-
-
-def ext4_oracles() -> dict[str, str]:
-    return {
-        "q36_embedding_near_dups": _q36_sql(),
-        "q37_ivf_assignments": _q37_sql(),
-        "q38_sessionize": _Q38_SQL,
-        "q84_ivf_probe_topk": _q84_sql(),
-    }
+register("q38_sessionize", q38_sessionize, _Q38_SQL)

@@ -6,11 +6,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _t
+from .entry_registry import register
 from .operators import dedup
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -56,6 +54,7 @@ SELECT conv_id, turn_idx,
        'UNKNOWN' AS lob
 FROM extracted
 """
+register("q39_flagship_extract", q39_flagship_extract, _Q39_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -88,14 +87,4 @@ WHERE losers.doc_id IS NULL
 """
 
 
-EXT5_QUERIES = {
-    "q39_flagship_extract": q39_flagship_extract,
-    "q40_dedup_keep_list": q40_dedup_keep_list,
-}
-
-
-def ext5_oracles() -> dict[str, str]:
-    return {
-        "q39_flagship_extract": _Q39_SQL,
-        "q40_dedup_keep_list": _q40_sql(),
-    }
+register("q40_dedup_keep_list", q40_dedup_keep_list, _q40_sql())

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_registry import register
 from .sources.excel import excel_sheet_rows, write_minimal_xlsx
 
 _LOBS = ["AUTO", "WC", "GL"]
@@ -68,6 +69,7 @@ SELECT 'wb.xlsx' AS file_name, * FROM hdr
 UNION ALL
 SELECT 'wb.xlsx' AS file_name, * FROM data
 """
+register("q41_excel_sheets", q41_excel_sheets, _Q41_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -156,6 +158,9 @@ FROM sized WHERE island_rows >= 2
 """
 
 
+register("q42_detect_text_tables", q42_detect_text_tables, _q42_sql())
+
+
 # ---------------------------------------------------------------------------
 # q43 — multi-way dim-join rollup (claims-cost by region/carrier-nation):
 # the analytic reporting shape over the full dim chain (lineitem ⋈ orders ⋈
@@ -208,24 +213,7 @@ JOIN nation   ON c_nationkey = n_nationkey
 JOIN region   ON n_regionkey = r_regionkey
 GROUP BY 1, 2
 """
-
-
-EXT6_QUERIES = {
-    "q41_excel_sheets": q41_excel_sheets,
-    "q42_detect_text_tables": q42_detect_text_tables,
-    "q43_region_rollup": q43_region_rollup,
-}
-
-
-def ext6_oracles() -> dict[str, str]:
-    return {
-        "q41_excel_sheets": _Q41_SQL,
-        "q42_detect_text_tables": _q42_sql(),
-        "q43_region_rollup": _Q43_SQL,
-        "q44_layout_tables": _q44_sql(),
-        "q45_lattice_tables": _q45_sql(),
-        "q46_lattice_normalize": _q46_sql(),
-    }
+register("q43_region_rollup", q43_region_rollup, _Q43_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -369,7 +357,7 @@ FROM sized WHERE blk_rows >= 3
 """
 
 
-EXT6_QUERIES["q44_layout_tables"] = q44_layout_tables
+register("q44_layout_tables", q44_layout_tables, _q44_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -552,7 +540,7 @@ GROUP BY 1, 2, 3, 4
 """
 
 
-EXT6_QUERIES["q45_lattice_tables"] = q45_lattice_tables
+register("q45_lattice_tables", q45_lattice_tables, _q45_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -687,4 +675,4 @@ FROM joined
 """
 
 
-EXT6_QUERIES["q46_lattice_normalize"] = q46_lattice_normalize
+register("q46_lattice_normalize", q46_lattice_normalize, _q46_sql())

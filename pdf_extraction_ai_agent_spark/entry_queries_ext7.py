@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .entry_queries_ext import _SHINGLES_SQL, _WORDS_SQL, _docs, _md5l
+from .entry_registry import entries, register
 from .operators import curation
 
 
@@ -37,6 +38,9 @@ SELECT CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val' ELSE 'test' END AS s
 FROM (SELECT doc_id, ({h}) % 100 AS b FROM documents)
 GROUP BY 1
 """
+
+
+register("q47_deterministic_split", q47_deterministic_split, _q47_sql())
 
 
 def q48_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -71,18 +75,7 @@ FROM sizes s JOIN hits h USING (doc_id)
 """
 
 
-EXT7_QUERIES = {
-    "q47_deterministic_split": q47_deterministic_split,
-    "q48_contamination": q48_contamination,
-}
-
-
-def ext7_oracles() -> dict[str, str]:
-    return {
-        "q47_deterministic_split": _q47_sql(),
-        "q48_contamination": _q48_sql(),
-        **_EXT7_ORACLES_EXTRA,
-    }
+register("q48_contamination", q48_contamination, _q48_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -168,12 +161,8 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT7_QUERIES["q49_real_pdf_roundtrip"] = q49_real_pdf_roundtrip
-
-
-_EXT7_ORACLES_EXTRA = {"q49_real_pdf_roundtrip": _Q49_SQL}
+register("q49_real_pdf_roundtrip", q49_real_pdf_roundtrip,
+         _Q49_SQL, pinned=_payload_q49)
 
 
 # ---------------------------------------------------------------------------
@@ -218,8 +207,7 @@ GROUP BY lang
 """
 
 
-EXT7_QUERIES["q50_stratified_sample"] = q50_stratified_sample
-_EXT7_ORACLES_EXTRA["q50_stratified_sample"] = _q50_sql()
+register("q50_stratified_sample", q50_stratified_sample, _q50_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -255,10 +243,8 @@ def q51_objstm_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Same contract as q49 — the oracle computes expected text from the table,
 # independent of which PDF flavor carried it — so q51 REUSES q49's SQL twin
 # (one maintained copy; review finding).
-
-
-EXT7_QUERIES["q51_objstm_pdf_roundtrip"] = q51_objstm_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q51_objstm_pdf_roundtrip"] = _Q49_SQL
+register("q51_objstm_pdf_roundtrip", q51_objstm_pdf_roundtrip,
+         _Q49_SQL, pinned=_payload_q51)
 
 
 # ---------------------------------------------------------------------------
@@ -301,8 +287,7 @@ WHERE (l.doc_id % 2 = 1) OR (r.doc_id % 2 = 1)
 """
 
 
-EXT7_QUERIES["q52_incremental_dedup"] = q52_incremental_dedup
-_EXT7_ORACLES_EXTRA["q52_incremental_dedup"] = _q52_sql()
+register("q52_incremental_dedup", q52_incremental_dedup, _q52_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -373,8 +358,7 @@ FROM spans GROUP BY doc_id
 """
 
 
-EXT7_QUERIES["q53_contaminated_spans"] = q53_contaminated_spans
-_EXT7_ORACLES_EXTRA["q53_contaminated_spans"] = _q53_sql()
+register("q53_contaminated_spans", q53_contaminated_spans, _q53_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -405,8 +389,8 @@ def q54_encrypted_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXT7_QUERIES["q54_encrypted_pdf_roundtrip"] = q54_encrypted_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q54_encrypted_pdf_roundtrip"] = _Q49_SQL
+register("q54_encrypted_pdf_roundtrip", q54_encrypted_pdf_roundtrip,
+         _Q49_SQL, pinned=_payload_q54)
 
 
 # ---------------------------------------------------------------------------
@@ -458,10 +442,7 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT7_QUERIES["q55_cid_pdf_roundtrip"] = q55_cid_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q55_cid_pdf_roundtrip"] = _Q55_SQL
+register("q55_cid_pdf_roundtrip", q55_cid_pdf_roundtrip, _Q55_SQL, pinned=_payload_q55)
 
 
 # ---------------------------------------------------------------------------
@@ -491,8 +472,7 @@ def q56_aes_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXT7_QUERIES["q56_aes_pdf_roundtrip"] = q56_aes_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q56_aes_pdf_roundtrip"] = _Q49_SQL
+register("q56_aes_pdf_roundtrip", q56_aes_pdf_roundtrip, _Q49_SQL, pinned=_payload_q56)
 
 
 # ---------------------------------------------------------------------------
@@ -522,8 +502,8 @@ def q57_differences_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-EXT7_QUERIES["q57_differences_pdf_roundtrip"] = q57_differences_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q57_differences_pdf_roundtrip"] = _Q55_SQL
+register("q57_differences_pdf_roundtrip", q57_differences_pdf_roundtrip,
+         _Q55_SQL, pinned=_payload_q57)
 
 
 # ---------------------------------------------------------------------------
@@ -655,10 +635,6 @@ def q58_aes256_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXT7_QUERIES["q58_aes256_pdf_roundtrip"] = q58_aes256_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q58_aes256_pdf_roundtrip"] = _Q49_SQL
-
-
 def _payload_q58(doc_id: int, text: str) -> bytes:
     from .fixtures import minipdf
 
@@ -671,19 +647,15 @@ def _payload_q58(doc_id: int, text: str) -> bytes:
     )
 
 
+register("q58_aes256_pdf_roundtrip", q58_aes256_pdf_roundtrip,
+         _Q49_SQL, pinned=_payload_q58)
+
+
 # --- data-pinned A/B support (round-6 verdict item 2) ----------------------
-# bench.py materializes these ONCE per bench session (HEAD's generator) as
+# bench.py materializes the corpus of every query registered with a
+# ``pinned=`` payload builder ONCE per bench session (HEAD's generator) as
 # (doc_id, pdf) parquet and both A/B arms extract the SAME bytes — ratios
 # then measure extraction code, not fixture-generator drift.
-PINNED_PAYLOAD_BUILDERS = {
-    "q49_real_pdf_roundtrip": _payload_q49,
-    "q51_objstm_pdf_roundtrip": _payload_q51,
-    "q54_encrypted_pdf_roundtrip": _payload_q54,
-    "q55_cid_pdf_roundtrip": _payload_q55,
-    "q56_aes_pdf_roundtrip": _payload_q56,
-    "q57_differences_pdf_roundtrip": _payload_q57,
-    "q58_aes256_pdf_roundtrip": _payload_q58,
-}
 
 
 def _pinned_extract_kernel(tagged: bool = False):
@@ -823,4 +795,4 @@ def pinned_queries() -> dict:
 
         return run
 
-    return {name: make(name) for name in PINNED_PAYLOAD_BUILDERS}
+    return {name: make(name) for name, e in entries().items() if e.pinned}

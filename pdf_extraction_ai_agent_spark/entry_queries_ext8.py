@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .entry_queries_ext7 import (
-    PINNED_PAYLOAD_BUILDERS,
     _docs,
     _page_lines,
     _positioned_items,
@@ -26,6 +25,7 @@ from .entry_queries_ext7 import (
     _ROUNDTRIP_SCHEMA,
     _roundtrip_kernel,
 )
+from .entry_registry import register
 
 # ---------------------------------------------------------------------------
 # q59 — simple-font ENCODING MATRIX round trip under the ORACLE GATE: the
@@ -93,21 +93,8 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT8_QUERIES = {
-    "q59_font_encodings_pdf_roundtrip": q59_font_encodings_pdf_roundtrip,
-}
-
-_EXT8_ORACLES = {
-    "q59_font_encodings_pdf_roundtrip": _Q59_SQL,
-}
-
-PINNED_PAYLOAD_BUILDERS["q59_font_encodings_pdf_roundtrip"] = _payload_q59
-
-
-def ext8_oracles() -> dict[str, str]:
-    return dict(_EXT8_ORACLES)
+register("q59_font_encodings_pdf_roundtrip", q59_font_encodings_pdf_roundtrip,
+         _Q59_SQL, pinned=_payload_q59)
 
 
 # ---------------------------------------------------------------------------
@@ -171,9 +158,8 @@ def q60_password_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXT8_QUERIES["q60_password_pdf_roundtrip"] = q60_password_pdf_roundtrip
-_EXT8_ORACLES["q60_password_pdf_roundtrip"] = _Q49_SQL
-PINNED_PAYLOAD_BUILDERS["q60_password_pdf_roundtrip"] = _payload_q60
+register("q60_password_pdf_roundtrip", q60_password_pdf_roundtrip,
+         _Q49_SQL, pinned=_payload_q60)
 
 
 # ---------------------------------------------------------------------------
@@ -211,9 +197,8 @@ def q61_filtered_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXT8_QUERIES["q61_filtered_pdf_roundtrip"] = q61_filtered_pdf_roundtrip
-_EXT8_ORACLES["q61_filtered_pdf_roundtrip"] = _Q49_SQL
-PINNED_PAYLOAD_BUILDERS["q61_filtered_pdf_roundtrip"] = _payload_q61
+register("q61_filtered_pdf_roundtrip", q61_filtered_pdf_roundtrip,
+         _Q49_SQL, pinned=_payload_q61)
 
 
 # ---------------------------------------------------------------------------
@@ -250,9 +235,8 @@ def q62_inline_image_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-EXT8_QUERIES["q62_inline_image_pdf_roundtrip"] = q62_inline_image_pdf_roundtrip
-_EXT8_ORACLES["q62_inline_image_pdf_roundtrip"] = _Q49_SQL
-PINNED_PAYLOAD_BUILDERS["q62_inline_image_pdf_roundtrip"] = _payload_q62
+register("q62_inline_image_pdf_roundtrip", q62_inline_image_pdf_roundtrip,
+         _Q49_SQL, pinned=_payload_q62)
 
 
 # ---------------------------------------------------------------------------
@@ -315,11 +299,8 @@ SELECT doc_id,
         + CASE WHEN k > 0 THEN len(trim(l4)) ELSE 0 END) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT8_QUERIES["q63_incremental_pdf_roundtrip"] = q63_incremental_pdf_roundtrip
-_EXT8_ORACLES["q63_incremental_pdf_roundtrip"] = _Q63_SQL
-PINNED_PAYLOAD_BUILDERS["q63_incremental_pdf_roundtrip"] = _payload_q63
+register("q63_incremental_pdf_roundtrip", q63_incremental_pdf_roundtrip,
+         _Q63_SQL, pinned=_payload_q63)
 
 
 # ---------------------------------------------------------------------------
@@ -424,11 +405,8 @@ SELECT doc_id,
         + len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT8_QUERIES["q64_form_xobject_pdf_roundtrip"] = q64_form_xobject_pdf_roundtrip
-_EXT8_ORACLES["q64_form_xobject_pdf_roundtrip"] = _Q64_SQL
-PINNED_PAYLOAD_BUILDERS["q64_form_xobject_pdf_roundtrip"] = _payload_q64
+register("q64_form_xobject_pdf_roundtrip", q64_form_xobject_pdf_roundtrip,
+         _Q64_SQL, pinned=_payload_q64)
 
 
 # ---------------------------------------------------------------------------
@@ -487,11 +465,8 @@ def q65_encrypted_objstm_pdf_roundtrip(
     )
 
 
-EXT8_QUERIES["q65_encrypted_objstm_pdf_roundtrip"] = (
-    q65_encrypted_objstm_pdf_roundtrip
-)
-_EXT8_ORACLES["q65_encrypted_objstm_pdf_roundtrip"] = _Q49_SQL
-PINNED_PAYLOAD_BUILDERS["q65_encrypted_objstm_pdf_roundtrip"] = _payload_q65
+register("q65_encrypted_objstm_pdf_roundtrip", q65_encrypted_objstm_pdf_roundtrip,
+         _Q49_SQL, pinned=_payload_q65)
 
 
 # ---------------------------------------------------------------------------
@@ -580,11 +555,8 @@ SELECT doc_id,
        (len(l1) + len(l2) + len(l3) + len(l4) + 3) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT8_QUERIES["q66_tagged_pdf_roundtrip"] = q66_tagged_pdf_roundtrip
-_EXT8_ORACLES["q66_tagged_pdf_roundtrip"] = _Q66_SQL
-PINNED_PAYLOAD_BUILDERS["q66_tagged_pdf_roundtrip"] = _payload_q66
+register("q66_tagged_pdf_roundtrip", q66_tagged_pdf_roundtrip,
+         _Q66_SQL, pinned=_payload_q66)
 
 
 # ---------------------------------------------------------------------------
@@ -620,9 +592,8 @@ def q67_type3_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXT8_QUERIES["q67_type3_pdf_roundtrip"] = q67_type3_pdf_roundtrip
-_EXT8_ORACLES["q67_type3_pdf_roundtrip"] = _Q55_SQL
-PINNED_PAYLOAD_BUILDERS["q67_type3_pdf_roundtrip"] = _payload_q67
+register("q67_type3_pdf_roundtrip", q67_type3_pdf_roundtrip,
+         _Q55_SQL, pinned=_payload_q67)
 
 
 # ---------------------------------------------------------------------------
@@ -653,6 +624,5 @@ def q68_hybrid_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXT8_QUERIES["q68_hybrid_pdf_roundtrip"] = q68_hybrid_pdf_roundtrip
-_EXT8_ORACLES["q68_hybrid_pdf_roundtrip"] = _Q49_SQL
-PINNED_PAYLOAD_BUILDERS["q68_hybrid_pdf_roundtrip"] = _payload_q68
+register("q68_hybrid_pdf_roundtrip", q68_hybrid_pdf_roundtrip,
+         _Q49_SQL, pinned=_payload_q68)

@@ -30,14 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .entry_queries_ext import _docs
-from .entry_queries_ext7 import PINNED_PAYLOAD_BUILDERS
-
-EXT9_QUERIES: dict = {}
-_EXT9_ORACLES: dict = {}
-
-
-def ext9_oracles() -> dict[str, str]:
-    return dict(_EXT9_ORACLES)
+from .entry_registry import register
 
 
 def _payload_q69(doc_id: int, text: str) -> bytes:
@@ -128,6 +121,8 @@ SELECT doc_id,
        CAST(NULL AS VARCHAR) AS ocr_error
 FROM parts
 """
+register("q69_scanned_pdf_ocr_roundtrip", q69_scanned_pdf_ocr_roundtrip,
+         _Q69_SQL, pinned=_payload_q69)
 
 
 # q70's twin predicts the SAME recovered text as a clean scan would give:
@@ -149,14 +144,8 @@ SELECT doc_id,
        CAST(NULL AS VARCHAR) AS ocr_error
 FROM parts
 """
-
-
-EXT9_QUERIES["q69_scanned_pdf_ocr_roundtrip"] = q69_scanned_pdf_ocr_roundtrip
-_EXT9_ORACLES["q69_scanned_pdf_ocr_roundtrip"] = _Q69_SQL
-PINNED_PAYLOAD_BUILDERS["q69_scanned_pdf_ocr_roundtrip"] = _payload_q69
-EXT9_QUERIES["q70_noisy_scan_ocr_roundtrip"] = q70_noisy_scan_ocr_roundtrip
-_EXT9_ORACLES["q70_noisy_scan_ocr_roundtrip"] = _Q70_SQL
-PINNED_PAYLOAD_BUILDERS["q70_noisy_scan_ocr_roundtrip"] = _payload_q70
+register("q70_noisy_scan_ocr_roundtrip", q70_noisy_scan_ocr_roundtrip,
+         _Q70_SQL, pinned=_payload_q70)
 
 
 # ---------------------------------------------------------------------------
@@ -271,11 +260,8 @@ SELECT doc_id,
        CAST(NULL AS VARCHAR) AS render_error
 FROM parts
 """
-
-
-EXT9_QUERIES["q71_render_pages_roundtrip"] = q71_render_pages_roundtrip
-_EXT9_ORACLES["q71_render_pages_roundtrip"] = _Q71_SQL
-PINNED_PAYLOAD_BUILDERS["q71_render_pages_roundtrip"] = _payload_q71
+register("q71_render_pages_roundtrip", q71_render_pages_roundtrip,
+         _Q71_SQL, pinned=_payload_q71)
 
 
 # ---------------------------------------------------------------------------
@@ -349,11 +335,7 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT9_QUERIES["q72_ctm_pdf_roundtrip"] = q72_ctm_pdf_roundtrip
-_EXT9_ORACLES["q72_ctm_pdf_roundtrip"] = _Q72_SQL
-PINNED_PAYLOAD_BUILDERS["q72_ctm_pdf_roundtrip"] = _payload_q72
+register("q72_ctm_pdf_roundtrip", q72_ctm_pdf_roundtrip, _Q72_SQL, pinned=_payload_q72)
 
 
 # ---------------------------------------------------------------------------
@@ -423,11 +405,8 @@ SELECT doc_id,
          AS needs_ocr
 FROM parts
 """
-
-
-EXT9_QUERIES["q73_ctm_form_roundtrip"] = q73_ctm_form_roundtrip
-_EXT9_ORACLES["q73_ctm_form_roundtrip"] = _Q73_SQL
-PINNED_PAYLOAD_BUILDERS["q73_ctm_form_roundtrip"] = _payload_q73
+register("q73_ctm_form_roundtrip", q73_ctm_form_roundtrip,
+         _Q73_SQL, pinned=_payload_q73)
 
 
 # ---------------------------------------------------------------------------
@@ -512,11 +491,8 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT9_QUERIES["q74_tm_matrix_roundtrip"] = q74_tm_matrix_roundtrip
-_EXT9_ORACLES["q74_tm_matrix_roundtrip"] = _Q74_SQL
-PINNED_PAYLOAD_BUILDERS["q74_tm_matrix_roundtrip"] = _payload_q74
+register("q74_tm_matrix_roundtrip", q74_tm_matrix_roundtrip,
+         _Q74_SQL, pinned=_payload_q74)
 
 
 # ---------------------------------------------------------------------------
@@ -572,13 +548,8 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT9_QUERIES["q75_inherited_resources_roundtrip"] = (
-    q75_inherited_resources_roundtrip
-)
-_EXT9_ORACLES["q75_inherited_resources_roundtrip"] = _Q75_SQL
-PINNED_PAYLOAD_BUILDERS["q75_inherited_resources_roundtrip"] = _payload_q75
+register("q75_inherited_resources_roundtrip", q75_inherited_resources_roundtrip,
+         _Q75_SQL, pinned=_payload_q75)
 
 
 # ---------------------------------------------------------------------------
@@ -664,11 +635,8 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT9_QUERIES["q76_rotate_pdf_roundtrip"] = q76_rotate_pdf_roundtrip
-_EXT9_ORACLES["q76_rotate_pdf_roundtrip"] = _Q76_SQL
-PINNED_PAYLOAD_BUILDERS["q76_rotate_pdf_roundtrip"] = _payload_q76
+register("q76_rotate_pdf_roundtrip", q76_rotate_pdf_roundtrip,
+         _Q76_SQL, pinned=_payload_q76)
 
 
 # ---------------------------------------------------------------------------
@@ -757,11 +725,8 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT9_QUERIES["q77_actualtext_pdf_roundtrip"] = q77_actualtext_pdf_roundtrip
-_EXT9_ORACLES["q77_actualtext_pdf_roundtrip"] = _Q77_SQL
-PINNED_PAYLOAD_BUILDERS["q77_actualtext_pdf_roundtrip"] = _payload_q77
+register("q77_actualtext_pdf_roundtrip", q77_actualtext_pdf_roundtrip,
+         _Q77_SQL, pinned=_payload_q77)
 
 
 # ---------------------------------------------------------------------------
@@ -836,11 +801,8 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT9_QUERIES["q78_tj_kern_pdf_roundtrip"] = q78_tj_kern_pdf_roundtrip
-_EXT9_ORACLES["q78_tj_kern_pdf_roundtrip"] = _Q78_SQL
-PINNED_PAYLOAD_BUILDERS["q78_tj_kern_pdf_roundtrip"] = _payload_q78
+register("q78_tj_kern_pdf_roundtrip", q78_tj_kern_pdf_roundtrip,
+         _Q78_SQL, pinned=_payload_q78)
 
 
 # ---------------------------------------------------------------------------
@@ -898,10 +860,7 @@ FROM documents d
 LEFT JOIN lstats l USING (doc_id)
 LEFT JOIN bstats b USING (doc_id)
 """
-
-
-EXT9_QUERIES["q79_repetition_scores"] = q79_repetition_scores
-_EXT9_ORACLES["q79_repetition_scores"] = _Q79_SQL
+register("q79_repetition_scores", q79_repetition_scores, _Q79_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -970,10 +929,7 @@ SELECT doc_id,
        CAST(n_phones AS BIGINT) AS n_phones
 FROM s3
 """
-
-
-EXT9_QUERIES["q80_pii_scrub"] = q80_pii_scrub
-_EXT9_ORACLES["q80_pii_scrub"] = _Q80_SQL
+register("q80_pii_scrub", q80_pii_scrub, _Q80_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1060,10 +1016,7 @@ SELECT doc_id,
         AND NOT contains(lower(text), '{')) AS doc_kept
 FROM filt
 """
-
-
-EXT9_QUERIES["q81_boilerplate_filter"] = q81_boilerplate_filter
-_EXT9_ORACLES["q81_boilerplate_filter"] = _Q81_SQL
+register("q81_boilerplate_filter", q81_boilerplate_filter, _Q81_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1102,10 +1055,7 @@ SELECT doc_id, n_tokens, start_offset,
          AS last_seq
 FROM s
 """
-
-
-EXT9_QUERIES["q82_pack_sequences"] = q82_pack_sequences
-_EXT9_ORACLES["q82_pack_sequences"] = _Q82_SQL
+register("q82_pack_sequences", q82_pack_sequences, _Q82_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1199,5 +1149,4 @@ FROM stats
 """
 
 
-EXT9_QUERIES["q83_gopher_flags"] = q83_gopher_flags
-_EXT9_ORACLES["q83_gopher_flags"] = _q83_sql()
+register("q83_gopher_flags", q83_gopher_flags, _q83_sql())

@@ -1,7 +1,7 @@
 """Materialize the pinned roundtrip corpora for the data-pinned A/B.
 
 Builds each named query's (doc_id, pdf) payload corpus ONCE from THIS
-tree's fixture generators (``PINNED_PAYLOAD_BUILDERS``) over the sf
+tree's fixture generators (the registry's ``pinned`` builders) over the sf
 documents table and writes it as parquet under ``out_dir/<name>``. Both
 A/B arms then extract the SAME bytes (bench.py passes the directory via
 ``$SPARK_GRAFT_BENCH_PINNED_DIR``), so a ratio measures extraction code,
@@ -27,14 +27,11 @@ def main() -> None:
 
     import pandas as pd
 
-    from pdf_extraction_ai_agent_spark import entry_queries_ext8  # noqa: F401
-    from pdf_extraction_ai_agent_spark import entry_queries_ext9  # noqa: F401
-    from pdf_extraction_ai_agent_spark.entry_queries_ext7 import (
-        PINNED_PAYLOAD_BUILDERS,  # ext8/ext9 imports register their builders
-    )
+    from pdf_extraction_ai_agent_spark.entry_registry import entries
     from pdf_extraction_ai_agent_spark.session import get_spark
 
-    wanted = [n for n in names if n in PINNED_PAYLOAD_BUILDERS]
+    pinned = {n: e.pinned for n, e in entries().items() if e.pinned}
+    wanted = [n for n in names if n in pinned]
     todo = [n for n in wanted if not os.path.isdir(os.path.join(out_dir, n))]
     counts: dict[str, object] = {
         n: "cached" for n in wanted if n not in todo
@@ -58,7 +55,7 @@ def main() -> None:
             .repartition(4 * cpus)
         )
         for name in todo:
-            builder = PINNED_PAYLOAD_BUILDERS[name]
+            builder = pinned[name]
 
             def kernel(batches, _b=builder):
                 for b in batches:
